@@ -1,6 +1,6 @@
 """Ad-hoc analysis chain — the reference's ``main.py:13-86`` flagship.
 
-Faithful reproduction of the chain: three sorted silver scans →
+Faithful reproduction of the chain: three silver scans →
 albums/reviews key renames (``main.py:25,34``) → J1 left join with
 differing key names (``main.py:37-52``) → J3 right join (``main.py:
 54-67``) → J5 left join + projection (``main.py:69-85``) → two
@@ -64,8 +64,8 @@ def full_dataset(bands_albums_df: DataFrame, albums_reviews_df: DataFrame) -> Da
 def analysis_chain(albums: DataFrame, bands: DataFrame, reviews: DataFrame) -> DataFrame:
     """The full flagship chain over silver entity tables, with the
     reference's key renames (``main.py:25,34``)."""
-    albums_r = albums.orderBy("id").withColumnRenamed("id", "album_id")
-    reviews_r = reviews.orderBy("id").withColumnRenamed("album", "album_id")
-    ba = bands_albums(albums_r, bands.orderBy("id"))
+    albums_r = albums.withColumnRenamed("id", "album_id")
+    reviews_r = reviews.withColumnRenamed("album", "album_id")
+    ba = bands_albums(albums_r, bands)
     ar = albums_reviews(reviews_r, albums_r)
     return full_dataset(ba, ar)

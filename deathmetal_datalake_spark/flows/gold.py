@@ -6,9 +6,13 @@ per SURVEY.md §7.4: O5's head(10)-after-sort becomes row_number with a
 band_id tie-break; O1/O2's sort-direction disagreement resolves to the
 Daft variant (country asc, count desc); counts are row-counts.
 
-The reference materializes music/reviews twice (once for the empty
-guard, once per mart — ``flows/gold.py:151`` then ``:62``); here the
-two inputs are cached once and every mart reuses the cached plan.
+The reference materializes music/reviews once for the empty guard and
+again per mart (``flows/gold.py:151`` then ``:62``). Here the J4 join
+and its per-band aggregate run once: ``band_avg_scores`` is written,
+and the three marts built on the same groups (G1, G4, O6) read the
+written parquet back. ``avg_score`` is an exact decimal sum divided
+once by the non-null count, so it does not depend on partitioning and
+the ranking cut is the same on every run.
 """
 
 from __future__ import annotations
@@ -18,51 +22,44 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deathmetal_datalake_spark.operators.aggregates import grouped_stats
 from deathmetal_datalake_spark.operators.cleaning import normalize_country
 from deathmetal_datalake_spark.operators.topk import top_n_per_group
 
 _BRAZIL_VARIANTS = ["brazil", "brasil"]
 
 
-def _reviews_with_bands(reviews: DataFrame, music: DataFrame) -> DataFrame:
-    """J4 enrichment (`flows/gold.py:85,101`): album_reviews ⟕ music_catalog."""
-    return reviews.join(
+def band_avg_scores(reviews: DataFrame, music: DataFrame) -> DataFrame:
+    """J4 enrichment (`flows/gold.py:85,101`: album_reviews ⟕
+    music_catalog) + G2 (`flows/gold.py:97-110`): count/mean/min/max/std
+    of score per band (std = stddev_samp, Polars ddof=1)."""
+    joined = reviews.join(
         music.select("album_id", "band_id", "band_name", "country"), "album_id", "left"
     )
-
-
-def top10_by_country(reviews: DataFrame, music: DataFrame) -> DataFrame:
-    """G1+O2+O5 (`flows/gold.py:82-94`): per-country top-10 bands by
-    review count; deterministic row_number (desc count, asc band_id)."""
-    agg = _reviews_with_bands(reviews, music).groupBy("country", "band_id", "band_name").agg(
-        F.count(F.lit(1)).alias("review_count"),
-        F.avg("score").alias("avg_score"),
-    )
-    top = top_n_per_group(
-        agg, ["country"], [F.desc("review_count"), F.asc("band_id")], n=10
-    )
-    return top.orderBy(F.asc("country"), F.desc("review_count"))
-
-
-def band_avg_scores(reviews: DataFrame, music: DataFrame) -> DataFrame:
-    """G2 (`flows/gold.py:97-110`): count/mean/min/max/std of score per
-    band (std = stddev_samp, Polars ddof=1)."""
+    exact_sum = F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
     return (
-        grouped_stats(
-            _reviews_with_bands(reviews, music),
-            ["band_id", "band_name", "country"],
-            "score",
-            {
-                "review_count": "count",
-                "avg_score": "avg",
-                "min_score": "min",
-                "max_score": "max",
-                "std_score": "std",
-            },
+        joined.groupBy("band_id", "band_name", "country")
+        .agg(
+            F.count(F.lit(1)).alias("review_count"),
+            (exact_sum / F.count("score")).alias("avg_score"),
+            F.min("score").alias("min_score"),
+            F.max("score").alias("max_score"),
+            F.stddev_samp("score").alias("std_score"),
         )
         .orderBy(F.desc("avg_score"))
     )
+
+
+def top10_by_country(scores: DataFrame) -> DataFrame:
+    """G1+O2+O5 (`flows/gold.py:82-94`): per-country top-10 bands by
+    review count; deterministic row_number (desc count, asc band_id).
+    G1 groups like G2, so it is a projection of G2's result."""
+    top = top_n_per_group(
+        scores.select("country", "band_id", "band_name", "review_count", "avg_score"),
+        ["country"],
+        [F.desc("review_count"), F.asc("band_id")],
+        n=10,
+    )
+    return top.orderBy(F.asc("country"), F.desc("review_count"))
 
 
 def brazilian_bands(scores: DataFrame) -> DataFrame:
@@ -79,9 +76,11 @@ def brazilian_bands(scores: DataFrame) -> DataFrame:
 
 def band_album_counts(music: DataFrame) -> DataFrame:
     """G3 (`flows/gold.py:125-131`): albums per band, sorted desc."""
-    return grouped_stats(
-        music, ["band_id", "band_name", "country"], "band_id", {"album_count": "count"}
-    ).orderBy(F.desc("album_count"))
+    return (
+        music.groupBy("band_id", "band_name", "country")
+        .agg(F.count(F.lit(1)).alias("album_count"))
+        .orderBy(F.desc("album_count"))
+    )
 
 
 def band_score_ranking(scores: DataFrame) -> DataFrame:
@@ -93,27 +92,24 @@ def band_score_ranking(scores: DataFrame) -> DataFrame:
 def gold_flow(
     spark: SparkSession, silver_paths: dict[str, str], gold_dir: str
 ) -> dict[str, str]:
-    music = spark.read.parquet(silver_paths["music_catalog"]).cache()
-    reviews = spark.read.parquet(silver_paths["album_reviews"]).cache()
+    music = spark.read.parquet(silver_paths["music_catalog"])
+    reviews = spark.read.parquet(silver_paths["album_reviews"])
 
-    # Empty guard (`flows/gold.py:63-65,151-153`) — one action on the
-    # cached plans, not a separate materialization.
+    # Empty guard (`flows/gold.py:63-65,151-153`), before any mart is written.
     if music.isEmpty() or reviews.isEmpty():
         raise ValueError("gold flow aborted: empty silver inputs")
 
     out: dict[str, str] = {}
-    scores = band_avg_scores(reviews, music)
-    marts: dict[str, DataFrame] = {
-        "top10_by_country": top10_by_country(reviews, music),
-        "band_avg_scores": scores,
-        "brazilian_bands": brazilian_bands(scores),
-        "band_album_counts": band_album_counts(music),
-        "band_score_ranking": band_score_ranking(scores),
-    }
-    for name, df in marts.items():
+
+    def write(name: str, df: DataFrame) -> None:
         dest = os.path.join(gold_dir, name)
         df.write.mode("overwrite").option("compression", "snappy").parquet(dest)
         out[name] = dest
-    music.unpersist()
-    reviews.unpersist()
+
+    write("band_avg_scores", band_avg_scores(reviews, music))
+    scores = spark.read.parquet(out["band_avg_scores"])
+    write("top10_by_country", top10_by_country(scores))
+    write("brazilian_bands", brazilian_bands(scores))
+    write("band_album_counts", band_album_counts(music))
+    write("band_score_ranking", band_score_ranking(scores))
     return out

@@ -8,7 +8,6 @@ from deathmetal_datalake_spark.operators.cleaning import (
     strict_cast,
     validate_columns,
 )
-from deathmetal_datalake_spark.operators.aggregates import grouped_stats
 from deathmetal_datalake_spark.operators.topk import top_n_per_group
 
 __all__ = [
@@ -20,6 +19,5 @@ __all__ = [
     "pipe_to_comma",
     "strict_cast",
     "validate_columns",
-    "grouped_stats",
     "top_n_per_group",
 ]

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from deathmetal_datalake_spark.operators.aggregates import grouped_stats
 from deathmetal_datalake_spark.operators.cleaning import lenient_cast, normalize_country
 from deathmetal_datalake_spark.operators.topk import top_n_per_group
 from deathmetal_datalake_spark.plans.registry import (
@@ -296,12 +295,9 @@ def g3_customer_counts_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     joined = customer.join(broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-    return grouped_stats(
-        joined.select(F.col("n_nationkey").alias("nation_id"), F.col("n_name").alias("nation_name")),
-        ["nation_id", "nation_name"],
-        "nation_id",
-        {"customer_count": "count"},
-    )
+    return joined.groupBy(
+        F.col("n_nationkey").alias("nation_id"), F.col("n_name").alias("nation_name")
+    ).agg(F.count(F.lit(1)).alias("customer_count"))
 
 
 # --------------------------------------------------------------------------

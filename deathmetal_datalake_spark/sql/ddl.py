@@ -114,12 +114,13 @@ SELECT band_name,
        review_count,
        country
 FROM {scores_view}
-ORDER BY avg_score DESC, band_name ASC
+ORDER BY avg_score DESC, band_id ASC
 LIMIT 100
 """
 
 
 def create_ranking_view(spark: SparkSession, scores_view: str = "band_avg_scores") -> None:
     """The gold ranking view (``scripts/trino_create_tables.sql:114-121``)
-    with the deterministic tie-break (SURVEY.md §7.4)."""
+    with the ``band_score_ranking`` mart's deterministic band_id
+    tie-break (SURVEY.md §7.4); band_name is not unique."""
     spark.sql(RANKING_VIEW_SQL.format(scores_view=scores_view))

@@ -2,22 +2,24 @@
 
 DuckDB recomputes every silver/gold table independently from the same
 landing CSVs (SURVEY.md §5 test plan #2/#3); results are compared
-order-insensitively with exact values for ints/strings and 1e-9
-relative tolerance for float aggregates (gold marts use plain double
-avg/std — engine-order-dependent in the last ulps, unlike the
-driver-facing catalog which uses the exact decimal trick).
+order-insensitively with exact values for ints/strings and floats
+rounded to 9 digits: gold ``avg_score`` is an exact decimal sum divided
+once (bit-stable across partitionings, but DuckDB's double AVG is not),
+and ``std_score`` is a plain double stddev_samp.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from deathmetal_datalake_spark.flows.analysis import analysis_chain
 from deathmetal_datalake_spark.flows.bronze import bronze_flow
-from deathmetal_datalake_spark.flows.gold import gold_flow
+from deathmetal_datalake_spark.flows.gold import band_avg_scores, gold_flow
 from deathmetal_datalake_spark.flows.silver import silver_flow
 from tests.deathmetal_fixtures import generate
 
@@ -216,10 +218,39 @@ def test_gold_band_album_counts(spark, pipeline):
 
 
 def test_gold_ranking_is_top100(spark, pipeline):
-    df = spark.read.parquet(pipeline["gold"]["band_score_ranking"])
-    assert df.count() <= 100
-    scores = [r["avg_score"] for r in df.orderBy("band_id").collect()]
-    assert all(s is not None or True for s in scores)
+    """O6 is exactly band_avg_scores' top 100 under (avg_score desc,
+    band_id asc), row for row and bit for bit."""
+    got = _rows(spark.read.parquet(pipeline["gold"]["band_score_ranking"]))
+    scores = spark.read.parquet(pipeline["gold"]["band_avg_scores"])
+    want = _rows(scores.orderBy(F.desc("avg_score"), F.asc("band_id")).limit(100))
+    assert want and got == want
+
+
+def test_gold_avg_score_is_partitioning_independent(spark, pipeline):
+    """avg_score is an exact decimal sum divided once: the same bits
+    whatever the partitioning of the reviews."""
+    music = spark.read.parquet(pipeline["silver"]["music_catalog"])
+    reviews = spark.read.parquet(pipeline["silver"]["album_reviews"])
+
+    def avgs(n):
+        df = band_avg_scores(reviews.repartition(n), music)
+        return {(r["band_id"], r["band_name"], r["country"]): r["avg_score"] for r in df.collect()}
+
+    one, seven = avgs(1), avgs(7)
+    assert len(one) > 1
+    assert one == seven
+
+
+@pytest.mark.parametrize("empty_input", ["album_reviews", "music_catalog"])
+def test_gold_empty_guard(spark, pipeline, tmp_path, empty_input):
+    """An empty silver input aborts the flow before any mart is written."""
+    silver = dict(pipeline["silver"])
+    silver[empty_input] = str(tmp_path / empty_input)
+    spark.read.parquet(pipeline["silver"][empty_input]).limit(0).write.parquet(silver[empty_input])
+    gold_dir = tmp_path / "gold"
+    with pytest.raises(ValueError, match="empty silver inputs"):
+        gold_flow(spark, silver, str(gold_dir))
+    assert not gold_dir.exists() or os.listdir(gold_dir) == []
 
 
 def test_top10_truncates(spark, pipeline):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from deathmetal_datalake_spark.flows.bronze import bronze_flow
-from deathmetal_datalake_spark.flows.gold import gold_flow
+from deathmetal_datalake_spark.flows.gold import band_score_ranking, gold_flow
 from deathmetal_datalake_spark.flows.silver import silver_flow
 from deathmetal_datalake_spark.sql.ddl import create_ranking_view, register_zone_tables
 from tests.deathmetal_fixtures import generate
@@ -44,6 +44,22 @@ def test_ranking_view_top100(spark, zones):
     assert 0 < len(rows) <= 100
     scores = [r["avg_score"] for r in rows]
     assert scores == sorted(scores, reverse=True)
+    # The view and the band_score_ranking mart share one tie-break.
+    mart = spark.read.parquet(gold["band_score_ranking"]).select(
+        "band_name", "avg_score", "review_count", "country"
+    )
+    assert [tuple(r) for r in rows] == [tuple(r) for r in mart.collect()]
+    # 150 bands tied on avg_score, band_name descending as band_id rises:
+    # the cut at 100 keeps the lowest band_ids in both.
+    tied = spark.createDataFrame(
+        [(i, f"band {999 - i}", 50.0, 3, "Sweden") for i in range(150)],
+        "band_id BIGINT, band_name STRING, avg_score DOUBLE, review_count BIGINT, country STRING",
+    )
+    tied.createOrReplaceTempView("tied_scores")
+    create_ranking_view(spark, "tied_scores")
+    rows = spark.sql("SELECT * FROM band_score_ranking").collect()
+    mart = band_score_ranking(tied).select("band_name", "avg_score", "review_count", "country")
+    assert [tuple(r) for r in rows] == [tuple(r) for r in mart.collect()]
 
 
 def test_typed_ddl_pins_reference_types(spark):
