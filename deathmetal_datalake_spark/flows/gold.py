@@ -13,6 +13,12 @@ and the three marts built on the same groups (G1, G4, O6) read the
 written parquet back. ``avg_score`` is an exact decimal sum divided
 once by the non-null count, so it does not depend on partitioning and
 the ranking cut is the same on every run.
+
+The marts are written in two concurrent steps (:func:`fan_out`, one
+thread per output): ``band_avg_scores`` with ``band_album_counts``,
+then the three marts that read ``band_avg_scores`` back. Every read
+declares its schema — the silver contracts, and the schema of the frame
+just written — so no read launches a footer-inference job.
 """
 
 from __future__ import annotations
@@ -22,8 +28,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deathmetal_datalake_spark.flows.bronze import fan_out, write_parquet
 from deathmetal_datalake_spark.operators.cleaning import normalize_country
 from deathmetal_datalake_spark.operators.topk import top_n_per_group
+from deathmetal_datalake_spark.schemas import ALBUM_REVIEWS, MUSIC_CATALOG
 
 _BRAZIL_VARIANTS = ["brazil", "brasil"]
 
@@ -92,24 +100,28 @@ def band_score_ranking(scores: DataFrame) -> DataFrame:
 def gold_flow(
     spark: SparkSession, silver_paths: dict[str, str], gold_dir: str
 ) -> dict[str, str]:
-    music = spark.read.parquet(silver_paths["music_catalog"])
-    reviews = spark.read.parquet(silver_paths["album_reviews"])
+    music = spark.read.schema(MUSIC_CATALOG).parquet(silver_paths["music_catalog"])
+    reviews = spark.read.schema(ALBUM_REVIEWS).parquet(silver_paths["album_reviews"])
 
     # Empty guard (`flows/gold.py:63-65,151-153`), before any mart is written.
     if music.isEmpty() or reviews.isEmpty():
         raise ValueError("gold flow aborted: empty silver inputs")
 
-    out: dict[str, str] = {}
+    names = [
+        "band_avg_scores", "top10_by_country", "brazilian_bands",
+        "band_album_counts", "band_score_ranking",
+    ]
+    out = {name: os.path.join(gold_dir, name) for name in names}
 
-    def write(name: str, df: DataFrame) -> None:
-        dest = os.path.join(gold_dir, name)
-        df.write.mode("overwrite").option("compression", "snappy").parquet(dest)
-        out[name] = dest
+    def write_all(marts: dict[str, DataFrame]) -> None:
+        fan_out(spark, lambda name: write_parquet(marts[name], out[name]), marts)
 
-    write("band_avg_scores", band_avg_scores(reviews, music))
-    scores = spark.read.parquet(out["band_avg_scores"])
-    write("top10_by_country", top10_by_country(scores))
-    write("brazilian_bands", brazilian_bands(scores))
-    write("band_album_counts", band_album_counts(music))
-    write("band_score_ranking", band_score_ranking(scores))
+    avg = band_avg_scores(reviews, music)
+    write_all({"band_avg_scores": avg, "band_album_counts": band_album_counts(music)})
+    scores = spark.read.schema(avg.schema).parquet(out["band_avg_scores"])
+    write_all({
+        "top10_by_country": top10_by_country(scores),
+        "brazilian_bands": brazilian_bands(scores),
+        "band_score_ranking": band_score_ranking(scores),
+    })
     return out

@@ -6,6 +6,12 @@ start_year, pipe→comma); execution is lazy end-to-end — the reference
 eagerly downloads each object before wrapping it lazily
 (``flows/silver.py:44-45``), which defeats pushdown; here column
 pruning and predicate pushdown reach the parquet scan.
+
+Every typed frame and both marts are built (and validated) before
+anything is written, so a bad input fails the flow with an empty silver
+zone. The marts recompute from the typed frames rather than reading the
+written tables, so all outputs are independent and :func:`fan_out`
+writes them as concurrent Spark jobs, one thread per output.
 """
 
 from __future__ import annotations
@@ -15,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deathmetal_datalake_spark.flows.bronze import fan_out, write_parquet
 from deathmetal_datalake_spark.operators.cleaning import (
     drop_embedded_header_rows,
     extract_first_year,
@@ -108,29 +115,16 @@ def silver_flow(
 ) -> dict[str, str]:
     """Bronze parquet → silver tables + marts, with the reference's
     dataset-presence conditionals (`flows/silver.py:169-183`)."""
-    out: dict[str, str] = {}
-    typed: dict[str, DataFrame] = {}
+    frames = {
+        ds: _TRANSFORMS[ds](spark.read.parquet(path))
+        for ds, path in bronze_paths.items()
+        if ds in _TRANSFORMS
+    }
+    if "albums" in frames and "bands" in frames:
+        frames["music_catalog"] = create_music_catalog(frames["albums"], frames["bands"])
+    if "reviews" in frames and "albums" in frames:
+        frames["album_reviews"] = create_album_reviews(frames["reviews"], frames["albums"])
 
-    for ds, path in bronze_paths.items():
-        if ds not in _TRANSFORMS:
-            continue
-        typed[ds] = _TRANSFORMS[ds](spark.read.parquet(path))
-        dest = os.path.join(silver_dir, ds)
-        typed[ds].write.mode("overwrite").option("compression", "snappy").parquet(dest)
-        out[ds] = dest
-
-    if "albums" in typed and "bands" in typed:
-        dest = os.path.join(silver_dir, "music_catalog")
-        create_music_catalog(typed["albums"], typed["bands"]).write.mode("overwrite").option(
-            "compression", "snappy"
-        ).parquet(dest)
-        out["music_catalog"] = dest
-
-    if "reviews" in typed and "albums" in typed:
-        dest = os.path.join(silver_dir, "album_reviews")
-        create_album_reviews(typed["reviews"], typed["albums"]).write.mode("overwrite").option(
-            "compression", "snappy"
-        ).parquet(dest)
-        out["album_reviews"] = dest
-
+    out = {name: os.path.join(silver_dir, name) for name in frames}
+    fan_out(spark, lambda name: write_parquet(frames[name], out[name]), out)
     return out

@@ -21,17 +21,97 @@ from deathmetal_datalake_spark.flows.analysis import analysis_chain
 from deathmetal_datalake_spark.flows.bronze import bronze_flow
 from deathmetal_datalake_spark.flows.gold import band_avg_scores, gold_flow
 from deathmetal_datalake_spark.flows.silver import silver_flow
+from deathmetal_datalake_spark.schemas import ALBUM_REVIEWS, MUSIC_CATALOG
 from tests.deathmetal_fixtures import generate
+
+
+def _in_job_group(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``. Returns its result,
+    the number of jobs the group holds and the number of jobs launched
+    meanwhile, counted between two marker jobs (job ids are sequential)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(tag):
+        sc.setJobGroup(tag, tag)
+        sc.parallelize([0], 1).count()
+        (job,) = tracker.getJobIdsForGroup(tag)
+        return job
+
+    first = marker(f"{group}-before")
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        last = marker(f"{group}-after")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(tracker.getJobIdsForGroup(group)), last - first - 1
 
 
 @pytest.fixture(scope="module")
 def pipeline(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("medallion")
     generate(str(base))
-    bronze = bronze_flow(spark, str(base / "landing"), str(base / "bronze"))
-    silver = silver_flow(spark, bronze, str(base / "silver"))
-    gold = gold_flow(spark, silver, str(base / "gold"))
-    return {"base": base, "bronze": bronze, "silver": silver, "gold": gold}
+    jobs = {}
+    bronze, *jobs["bronze"] = _in_job_group(
+        spark, "medallion-bronze",
+        lambda: bronze_flow(spark, str(base / "landing"), str(base / "bronze")),
+    )
+    silver, *jobs["silver"] = _in_job_group(
+        spark, "medallion-silver", lambda: silver_flow(spark, bronze, str(base / "silver"))
+    )
+    gold, *jobs["gold"] = _in_job_group(
+        spark, "medallion-gold", lambda: gold_flow(spark, silver, str(base / "gold"))
+    )
+    return {"base": base, "bronze": bronze, "silver": silver, "gold": gold, "jobs": jobs}
+
+
+@pytest.mark.parametrize("stage", ["bronze", "silver", "gold"])
+def test_flow_jobs_keep_the_callers_job_group(pipeline, stage):
+    """Every Spark job a flow launches, from its pool threads too, runs
+    in the caller's job group."""
+    grouped, launched = pipeline["jobs"][stage]
+    assert launched > 0
+    assert grouped == launched
+
+
+def test_bronze_failure_surfaces_unchanged(spark, pipeline, tmp_path, monkeypatch):
+    """A failing dataset re-raises its own exception on the caller."""
+    from deathmetal_datalake_spark.flows import bronze
+
+    boom = RuntimeError("reviews landing unreadable")
+
+    def fake_dataset(spark_, landing_dir, ds):
+        if ds == "reviews":
+            raise boom
+        return spark_.range(1)
+
+    monkeypatch.setattr(bronze, "bronze_dataset", fake_dataset)
+    with pytest.raises(RuntimeError, match="^reviews landing unreadable$") as caught:
+        bronze_flow(spark, str(pipeline["base"] / "landing"), str(tmp_path / "bronze"))
+    assert caught.value is boom
+
+
+@pytest.mark.parametrize("mart", ["music_catalog", "album_reviews"])
+def test_silver_marts_match_gold_read_schemas(spark, pipeline, mart):
+    """Gold reads the silver marts with declared schemas; silver writes
+    exactly those."""
+    schema = {"music_catalog": MUSIC_CATALOG, "album_reviews": ALBUM_REVIEWS}[mart]
+    assert spark.read.parquet(pipeline["silver"][mart]).schema == schema
+
+
+def test_silver_validates_before_writing(spark, pipeline, tmp_path):
+    """A bad input fails silver before any table is written."""
+    bronze = dict(pipeline["bronze"])
+    bronze["reviews"] = str(tmp_path / "reviews")
+    spark.read.parquet(pipeline["bronze"]["reviews"]).drop("score").write.parquet(
+        bronze["reviews"]
+    )
+    silver_dir = tmp_path / "silver"
+    with pytest.raises(ValueError, match=r"missing columns in reviews: \['score'\]"):
+        silver_flow(spark, bronze, str(silver_dir))
+    assert not silver_dir.exists() or os.listdir(silver_dir) == []
 
 
 def _rows(df):
