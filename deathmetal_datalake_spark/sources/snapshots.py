@@ -25,20 +25,27 @@ Metadata is O(#snapshots) tiny JSON handled driver-side; the refs file
 is updated via atomic rename, so readers never see a torn ref.
 
 Multi-writer safety (the catalog-service role Nessie plays in the
-reference): the publish step — read refs, validate the expected parent,
-allocate a snapshot id, write the manifest, move the ref — runs inside a
-cross-process commit lock (``metadata/commit.lock``, created with
-``O_CREAT|O_EXCL`` so exactly one process can hold it; stale locks from
-crashed writers are expired by age). The expensive data write stays
-OUTSIDE the lock, so writers serialize only on the O(bytes-of-JSON)
-metadata swap — the same shape as Iceberg's optimistic commit against a
-locking catalog. ``commit_with_retry`` layers the Iceberg-style
-read-modify-write retry loop on top for transactional upserts.
+reference): every commit — write, upsert, delete, fold, branch merge,
+rebase and catalog transaction — publishes through ONE function,
+:func:`_publish`: under a cross-process commit lock
+(``metadata/commit.lock``, created with ``O_CREAT|O_EXCL`` by
+:func:`_file_lock` so exactly one process can hold it; stale locks from
+crashed writers are expired by age) it checks the CAS, loads the parent,
+allocates a snapshot id, derives the child, writes the manifest and
+moves the ref(s). Commits differ only in what they stage and in how the
+child derives from its parent (:func:`_written`, :func:`_keyed`,
+:func:`_extended`). The expensive data write
+(:meth:`SnapshotTable._write_data_dirs`) stays OUTSIDE the lock, so
+writers serialize only on the O(bytes-of-JSON) metadata swap — the same
+shape as Iceberg's optimistic commit against a locking catalog.
+``commit_with_retry`` layers the Iceberg-style read-modify-write retry
+loop on top for transactional upserts.
 """
 
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import datetime
 import json
 import os
@@ -866,6 +873,243 @@ class _Unset:
 UNSET = _Unset()
 
 
+@contextlib.contextmanager
+def _file_lock(lock_path: str, timeout_s: float = 30.0):
+    """Cross-process mutual exclusion on ``lock_path`` — the commit lock
+    of a table (``metadata/commit.lock``) or of a catalog
+    (``_catalog/commit.lock``).
+
+    ``O_CREAT | O_EXCL`` is atomic on POSIX filesystems: exactly one
+    process wins creation. Losers poll with jitter; a lock file older
+    than ``_LOCK_STALE_S`` (crashed holder) is broken by renaming it
+    aside first. Two safety refinements:
+
+    - **Ownership-verified release**: the holder records its lock
+      file's (dev, inode) at acquisition and unlinks at release only
+      if the path still carries that identity — a holder whose lock
+      was (wrongly or rightly) broken never deletes a NEW holder's
+      lock.
+    - **Re-verified break**: after renaming a presumed-stale lock
+      aside, the breaker re-checks the renamed file's age. If it
+      turns out FRESH (a live holder acquired between the stat and
+      the rename), the breaker restores it via ``os.link`` — which
+      preserves the inode, so the live holder's release check still
+      passes — and backs off. The residual window needs a third
+      writer to acquire within that same microsecond interval right
+      after a 60 s crash; accepted and documented for a
+      filesystem-level lock (a catalog service removes it).
+    """
+    deadline = time.monotonic() + timeout_s
+    my_ident: Optional[tuple[int, int]] = None
+    while True:
+        try:
+            fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            st = os.fstat(fd)
+            my_ident = (st.st_dev, st.st_ino)
+            os.write(fd, f"pid={os.getpid()}\n".encode())
+            os.close(fd)
+            break
+        except FileExistsError:
+            try:
+                age = time.time() - os.path.getmtime(lock_path)
+            except OSError:
+                # Holder likely released between open and stat; any
+                # persistent stat failure still honors the deadline
+                # instead of busy-spinning.
+                if time.monotonic() > deadline:
+                    raise TimeoutError(
+                        f"commit lock {lock_path}: cannot stat lock file "
+                        f"for >{timeout_s}s"
+                    )
+                time.sleep(_LOCK_POLL_S * (1 + random.random()))
+                continue
+            if age > _LOCK_STALE_S:
+                stale = lock_path + f".stale-{uuid.uuid4().hex[:8]}"
+                try:
+                    os.rename(lock_path, stale)
+                except OSError:
+                    continue  # another breaker won the rename race
+                try:
+                    broken_fresh = (
+                        time.time() - os.path.getmtime(stale) <= _LOCK_STALE_S
+                    )
+                except OSError:
+                    broken_fresh = False
+                if broken_fresh:
+                    # We moved a LIVE holder's lock: put it back with
+                    # its inode intact (link fails if the path was
+                    # re-taken meanwhile — then the orphan is ours to
+                    # drop) and back off.
+                    try:
+                        os.link(stale, lock_path)
+                    except OSError:
+                        pass
+                    try:
+                        os.unlink(stale)
+                    except OSError:
+                        pass
+                    time.sleep(_LOCK_POLL_S * (1 + random.random()))
+                else:
+                    try:
+                        os.unlink(stale)
+                    except OSError:
+                        pass
+                continue
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"commit lock {lock_path} held for >{timeout_s}s "
+                    f"(lock file age {age:.1f}s)"
+                )
+            time.sleep(_LOCK_POLL_S * (1 + random.random()))
+    try:
+        yield
+    finally:
+        try:
+            st = os.stat(lock_path)
+            if (st.st_dev, st.st_ino) == my_ident:
+                os.unlink(lock_path)
+        except OSError:
+            pass
+
+
+# ---------------------------------------------------------------------------
+# The commit path. Every commit stages its data outside the lock, then
+# hands _publish a derivation of the child snapshot from its parent.
+# ---------------------------------------------------------------------------
+
+_DIR_MAPS = ("dir_stats", "file_stats", "dir_partitions", "dir_epochs")
+
+
+@dataclass(frozen=True)
+class _Dirs:
+    """Data dirs with their per-dir manifest maps: what a commit stages
+    (:meth:`SnapshotTable._write_data_dirs`) or keeps of a snapshot
+    (:func:`_dirs_of`). The field names are :class:`Snapshot`'s, so a
+    snapshot serves wherever a ``_Dirs`` is read."""
+
+    data_dirs: tuple[str, ...] = ()
+    dir_stats: dict = field(default_factory=dict)
+    file_stats: dict = field(default_factory=dict)
+    dir_partitions: dict = field(default_factory=dict)
+    dir_epochs: dict = field(default_factory=dict)
+
+
+def _dirs_of(snap: Snapshot, dirs) -> _Dirs:
+    """``snap`` restricted to ``dirs``: those dirs and their map entries."""
+    maps = {k: getattr(snap, k) for k in _DIR_MAPS}
+    return _Dirs(
+        tuple(dirs),
+        **{k: {d: m[d] for d in dirs if d in m} for k, m in maps.items()},
+    )
+
+
+def _extended(base, new: _Dirs) -> dict:
+    """Snapshot fields for ``base``'s dirs followed by ``new``'s — the
+    one rule by which a child inherits per-dir metadata."""
+    return {
+        "data_dirs": base.data_dirs + new.data_dirs,
+        **{k: {**getattr(base, k), **getattr(new, k)} for k in _DIR_MAPS},
+    }
+
+
+def _written(mode: str, staged: _Dirs):
+    """Derivation of a write: an append extends the parent (keeping its
+    deletes — appends don't resurrect deleted rows); an overwrite, or a
+    first commit, is ``staged`` alone."""
+
+    def derive(parent: Optional[Snapshot]) -> dict:
+        if mode == "append" and parent is not None:
+            return {
+                "mode": mode,
+                "deletes": parent.deletes,
+                **_extended(parent, staged),
+            }
+        return {"mode": mode, **_extended(_Dirs(), staged)}
+
+    return derive
+
+
+def _keyed(mode: str, staged: _Dirs, del_dir: str, key_col: str):
+    """Derivation of a keyed commit (upsert, delete, rebase): ``staged``
+    extends the parent, plus an equality delete of ``del_dir``'s keys
+    that covers ONLY the parent's dirs — the staged rows survive their
+    own keys."""
+
+    def derive(parent: Optional[Snapshot]) -> dict:
+        if parent is None:
+            raise LookupError(
+                f"{mode}: the branch has no snapshots yet; use write() "
+                "for the first commit"
+            )
+        return {
+            "mode": mode,
+            "deletes": parent.deletes + ((del_dir, key_col, parent.data_dirs),),
+            **_extended(parent, staged),
+        }
+
+    return derive
+
+
+def _expectation(ref: str, expected_parent) -> dict:
+    """The CAS ``{ref: expected head}`` — empty when no check is asked."""
+    return {} if isinstance(expected_parent, _Unset) else {ref: expected_parent}
+
+
+def _check_refs(refs: dict, expect: dict) -> None:
+    for ref, want in expect.items():
+        if refs.get(ref) != want:
+            raise CommitConflict(
+                f"branch {ref!r} is at snapshot {refs.get(ref)}, expected {want}"
+            )
+
+
+@dataclass(frozen=True)
+class _Commit:
+    """One snapshot for :func:`_publish`: ``derive(parent)`` returns the
+    child's content fields, the parent is the head of ``parent_ref``
+    (default ``ref``), and ``ref`` moves to the child. ``expect`` maps
+    refs to the heads they must still be at."""
+
+    table: "SnapshotTable"
+    ref: str
+    derive: Callable[[Optional[Snapshot]], dict]
+    expect: dict = field(default_factory=dict)
+    parent_ref: Optional[str] = None
+
+
+def _publish(commits, lock, read_refs, write_refs) -> list[Snapshot]:
+    """The commit point of every snapshot commit — write, upsert,
+    delete, fold, merge, rebase and catalog transactions. Under
+    ``lock``: check every CAS expectation first (a conflict publishes
+    nothing), then per commit load the parent, allocate an id, derive
+    the child and write its manifest; finally move every ref in ONE
+    ``write_refs`` — the single visibility point."""
+    with lock():
+        refs = read_refs()
+        for c in commits:
+            _check_refs(refs, c.expect)
+        out = []
+        for c in commits:
+            t = c.table
+            parent_id = refs.get(c.parent_ref or c.ref)
+            parent = None if parent_id is None else t._load_snapshot(parent_id)
+            snap = Snapshot(
+                snapshot_id=t._next_snapshot_id(),
+                parent_id=parent_id,
+                committed_at=time.time(),
+                **c.derive(parent),
+            )
+            # 'x' mode: if id allocation ever raced (it cannot, under the
+            # lock), fail loudly rather than overwrite a manifest.
+            with open(t._snap_path(snap.snapshot_id), "x") as f:
+                json.dump(_snapshot_to_json(snap), f, indent=1)
+            t._record_snapshot_id(snap.snapshot_id)
+            refs[c.ref] = snap.snapshot_id
+            out.append(snap)
+        write_refs(refs)
+    return out
+
+
 class SnapshotTable:
     """A versioned parquet table rooted at ``base_path``.
 
@@ -1328,101 +1572,10 @@ class SnapshotTable:
     def _lock_path(self) -> str:
         return os.path.join(self._meta_dir, "commit.lock")
 
-    @contextlib.contextmanager
     def _commit_lock(self, timeout_s: float = 30.0):
-        """Cross-process mutual exclusion for the metadata swap.
-
-        ``O_CREAT | O_EXCL`` is atomic on POSIX filesystems: exactly one
-        process wins creation. Losers poll with jitter; a lock file older
-        than ``_LOCK_STALE_S`` (crashed holder) is broken by renaming it
-        aside first. Two safety refinements:
-
-        - **Ownership-verified release**: the holder records its lock
-          file's (dev, inode) at acquisition and unlinks at release only
-          if the path still carries that identity — a holder whose lock
-          was (wrongly or rightly) broken never deletes a NEW holder's
-          lock.
-        - **Re-verified break**: after renaming a presumed-stale lock
-          aside, the breaker re-checks the renamed file's age. If it
-          turns out FRESH (a live holder acquired between the stat and
-          the rename), the breaker restores it via ``os.link`` — which
-          preserves the inode, so the live holder's release check still
-          passes — and backs off. The residual window needs a third
-          writer to acquire within that same microsecond interval right
-          after a 60 s crash; accepted and documented for a
-          filesystem-level lock (a catalog service removes it).
-        """
-        deadline = time.monotonic() + timeout_s
-        my_ident: Optional[tuple[int, int]] = None
-        while True:
-            try:
-                fd = os.open(self._lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                st = os.fstat(fd)
-                my_ident = (st.st_dev, st.st_ino)
-                os.write(fd, f"pid={os.getpid()}\n".encode())
-                os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    age = time.time() - os.path.getmtime(self._lock_path)
-                except OSError:
-                    # Holder likely released between open and stat; any
-                    # persistent stat failure still honors the deadline
-                    # instead of busy-spinning.
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(
-                            f"commit lock on {self.base_path}: cannot stat "
-                            f"lock file for >{timeout_s}s"
-                        )
-                    time.sleep(_LOCK_POLL_S * (1 + random.random()))
-                    continue
-                if age > _LOCK_STALE_S:
-                    stale = self._lock_path + f".stale-{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(self._lock_path, stale)
-                    except OSError:
-                        continue  # another breaker won the rename race
-                    try:
-                        broken_fresh = (
-                            time.time() - os.path.getmtime(stale) <= _LOCK_STALE_S
-                        )
-                    except OSError:
-                        broken_fresh = False
-                    if broken_fresh:
-                        # We moved a LIVE holder's lock: put it back with
-                        # its inode intact (link fails if the path was
-                        # re-taken meanwhile — then the orphan is ours to
-                        # drop) and back off.
-                        try:
-                            os.link(stale, self._lock_path)
-                        except OSError:
-                            pass
-                        try:
-                            os.unlink(stale)
-                        except OSError:
-                            pass
-                        time.sleep(_LOCK_POLL_S * (1 + random.random()))
-                    else:
-                        try:
-                            os.unlink(stale)
-                        except OSError:
-                            pass
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"commit lock on {self.base_path} held for >"
-                        f"{timeout_s}s (lock file age {age:.1f}s)"
-                    )
-                time.sleep(_LOCK_POLL_S * (1 + random.random()))
-        try:
-            yield
-        finally:
-            try:
-                st = os.stat(self._lock_path)
-                if (st.st_dev, st.st_ino) == my_ident:
-                    os.unlink(self._lock_path)
-            except OSError:
-                pass
+        """Cross-process mutual exclusion for the metadata swap — the
+        stale-safe :func:`_file_lock` on this table's lock path."""
+        return _file_lock(self._lock_path, timeout_s)
 
     # ---- snapshots ------------------------------------------------------
 
@@ -1497,14 +1650,22 @@ class SnapshotTable:
 
     # ---- write ----------------------------------------------------------
 
-    def _write_data_dirs(
-        self, df: DataFrame, prefix: str
-    ) -> tuple[list[str], dict, dict, dict]:
+    def _write_data_dirs(self, df: DataFrame, prefix: str) -> _Dirs:
         """Stage ``df`` as new data dirs under the CURRENT partition
-        spec (plain dir when none): returns (dirs, dir_partitions,
-        dir_stats, file_stats) for the commit. Shared by ``write`` and
-        the maintenance rewrites (``fold_deletes``) so every data path
-        honors the declared layout."""
+        spec (plain dir when none) and return them with their per-dir
+        maps — stats, file stats, partitions and write epochs — for the
+        commit. Every data path (writes, upserts, folds, rebases,
+        catalog transactions) stages here, so each honors the declared
+        layout, bloom columns and column registry."""
+        # Capture the registry epoch (and reconcile any new columns)
+        # BEFORE staging data: the df's column names were authored
+        # against the registry state at write start, so a rename/drop
+        # that commits DURING the (long) data write must not re-label
+        # this dir — stamping the pre-change epoch keeps the re-alias
+        # read correct, whereas stamping afterwards would register the
+        # old physical names as brand-new columns with fresh ids
+        # (silently splitting a renamed column's values on read).
+        epoch = self._registry_epoch_for_write(df)
         new_dir = os.path.join(self._data_dir, f"{prefix}-{uuid.uuid4().hex[:12]}")
         spec = self.partition_spec()
         if spec:
@@ -1561,7 +1722,49 @@ class SnapshotTable:
                     fentry = new_file_stats.get(d, {}).get(rel, {}).get(col)
                     if isinstance(fentry, dict):
                         fentry["bloom"] = fb
-        return new_dirs, new_partitions, new_dir_stats, new_file_stats
+        return _Dirs(
+            data_dirs=tuple(new_dirs),
+            dir_stats=new_dir_stats,
+            file_stats=new_file_stats,
+            dir_partitions=new_partitions,
+            dir_epochs={d: epoch for d in new_dirs} if epoch is not None else {},
+        )
+
+    def _write_key_dir(self, keys: DataFrame, key_col: str) -> str:
+        """Stage the distinct ``key_col`` values of ``keys`` as the key
+        dir of an equality delete."""
+        del_dir = os.path.join(self._data_dir, f"del-{uuid.uuid4().hex[:12]}")
+        keys.select(key_col).distinct().write.mode("errorifexists").parquet(del_dir)
+        return del_dir
+
+    def _expect_parent(self, branch: str, expected_parent) -> dict:
+        """The CAS of a commit on ``branch``, checked once now — fail
+        fast before anything is written; :func:`_publish` re-checks it
+        authoritatively under the lock."""
+        expect = _expectation(branch, expected_parent)
+        if expect:
+            _check_refs(self._read_refs(), expect)
+        return expect
+
+    def _commit(self, ref: str, derive, expect=None, parent_ref=None) -> Snapshot:
+        """Publish one snapshot on this table through :func:`_publish`."""
+        commit = _Commit(self, ref, derive, expect or {}, parent_ref)
+        return _publish(
+            [commit], self._commit_lock, self._read_refs, self._write_refs
+        )[0]
+
+    def _auto_fold(self, snap: Snapshot, branch: str) -> None:
+        """Auto-compaction trigger: every outstanding delete vector is
+        an anti-join every subsequent read replays, so unbounded
+        stacking degrades reads linearly in takedown count. Fold them
+        physically once the stack hits ``DELETE_FOLD_THRESHOLD``; a
+        concurrent writer beating the fold's CAS just postpones it to
+        the next commit (janitor semantics — maintenance never wins
+        over writers)."""
+        fold_after = self.DELETE_FOLD_THRESHOLD
+        if fold_after and len(snap.deletes) >= fold_after:
+            with contextlib.suppress(CommitConflict):
+                self.fold_deletes(branch=branch)
 
     def write(
         self,
@@ -1591,76 +1794,11 @@ class SnapshotTable:
         """
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-        if not isinstance(expected_parent, _Unset):
-            # Fail fast before the expensive data write; re-validated
-            # authoritatively under the lock below.
-            current = self._read_refs().get(branch)
-            if current != expected_parent:
-                raise CommitConflict(
-                    f"branch {branch!r} is at snapshot {current}, "
-                    f"expected {expected_parent}"
-                )
-        # Capture the registry epoch (and reconcile any new columns)
-        # BEFORE staging data: the df's column names were authored
-        # against the registry state at write start, so a rename/drop
-        # that commits DURING the (long) data write must not re-label
-        # this dir — stamping the pre-change epoch keeps the re-alias
-        # read correct, whereas stamping afterwards would register the
-        # old physical names as brand-new columns with fresh ids
-        # (silently splitting a renamed column's values on read).
-        write_epoch = self._registry_epoch_for_write(df)
+        expect = self._expect_parent(branch, expected_parent)
         # Data lands OUTSIDE the lock (write-then-publish): writers
         # serialize only on the metadata swap, never on the Spark job.
-        new_dirs, new_partitions, new_dir_stats, new_file_stats = (
-            self._write_data_dirs(df, "snap")
-        )
-        new_epochs = (
-            {d: write_epoch for d in new_dirs} if write_epoch is not None else {}
-        )
-        with self._commit_lock():
-            refs = self._read_refs()
-            parent_id = refs.get(branch)
-            if not isinstance(expected_parent, _Unset) and parent_id != expected_parent:
-                raise CommitConflict(
-                    f"branch {branch!r} is at snapshot {parent_id}, "
-                    f"expected {expected_parent}"
-                )
-            snapshot_id = self._next_snapshot_id()
-            deletes: tuple[tuple[str, str], ...] = ()
-            if mode == "append" and parent_id is not None:
-                parent = self._load_snapshot(parent_id)
-                data_dirs = parent.data_dirs + tuple(new_dirs)
-                deletes = parent.deletes  # appends don't resurrect deleted rows
-                dir_stats = {**parent.dir_stats, **new_dir_stats}
-                file_stats = {**parent.file_stats, **new_file_stats}
-                dir_partitions = {**parent.dir_partitions, **new_partitions}
-                dir_epochs = {**parent.dir_epochs, **new_epochs}
-            else:
-                data_dirs = tuple(new_dirs)
-                dir_stats = new_dir_stats
-                file_stats = new_file_stats
-                dir_partitions = new_partitions
-                dir_epochs = new_epochs
-            snap = Snapshot(
-                snapshot_id=snapshot_id,
-                parent_id=parent_id,
-                mode=mode,
-                data_dirs=data_dirs,
-                committed_at=time.time(),
-                deletes=deletes,
-                dir_stats=dir_stats,
-                file_stats=file_stats,
-                dir_partitions=dir_partitions,
-                dir_epochs=dir_epochs,
-            )
-            # 'x' mode: if id allocation ever raced (it cannot, under the
-            # lock), fail loudly rather than overwrite a manifest.
-            with open(self._snap_path(snapshot_id), "x") as f:
-                json.dump(_snapshot_to_json(snap), f, indent=1)
-            self._record_snapshot_id(snapshot_id)
-            refs[branch] = snapshot_id
-            self._write_refs(refs)
-        return snap
+        staged = self._write_data_dirs(df, "snap")
+        return self._commit(branch, _written(mode, staged), expect)
 
     def merge_upsert(
         self,
@@ -1711,66 +1849,12 @@ class SnapshotTable:
                 f"({kstats['n_nonnull'] - kstats['n_keys']} extra row(s)) "
                 "— MERGE requires at most one source row per key"
             )
-        if not isinstance(expected_parent, _Unset):
-            current = self._read_refs().get(branch)
-            if current != expected_parent:
-                raise CommitConflict(
-                    f"branch {branch!r} is at snapshot {current}, "
-                    f"expected {expected_parent}"
-                )
-        write_epoch = self._registry_epoch_for_write(df)
+        expect = self._expect_parent(branch, expected_parent)
         # Data and the key dir land OUTSIDE the lock (write-then-publish).
-        new_dirs, new_partitions, new_dir_stats, new_file_stats = (
-            self._write_data_dirs(df, "merge")
-        )
-        del_dir = os.path.join(self._data_dir, f"del-{uuid.uuid4().hex[:12]}")
-        df.select(key_col).distinct().write.mode("errorifexists").parquet(
-            del_dir
-        )
-        new_epochs = (
-            {d: write_epoch for d in new_dirs} if write_epoch is not None else {}
-        )
-        fold_after = self.DELETE_FOLD_THRESHOLD
-        with self._commit_lock():
-            refs = self._read_refs()
-            parent_id = refs.get(branch)
-            if not isinstance(expected_parent, _Unset) and parent_id != expected_parent:
-                raise CommitConflict(
-                    f"branch {branch!r} is at snapshot {parent_id}, "
-                    f"expected {expected_parent}"
-                )
-            if parent_id is None:
-                raise LookupError(
-                    f"branch {branch!r} has no snapshots to merge into; "
-                    "use write() for the first commit"
-                )
-            parent = self._load_snapshot(parent_id)
-            snapshot_id = self._next_snapshot_id()
-            snap = Snapshot(
-                snapshot_id=snapshot_id,
-                parent_id=parent_id,
-                mode="merge",
-                data_dirs=parent.data_dirs + tuple(new_dirs),
-                committed_at=time.time(),
-                # The delete covers ONLY the pre-merge dirs: the new dir's
-                # rows survive even though they carry the deleted keys.
-                deletes=parent.deletes
-                + ((del_dir, key_col, parent.data_dirs),),
-                dir_stats={**parent.dir_stats, **new_dir_stats},
-                file_stats={**parent.file_stats, **new_file_stats},
-                dir_partitions={**parent.dir_partitions, **new_partitions},
-                dir_epochs={**parent.dir_epochs, **new_epochs},
-            )
-            with open(self._snap_path(snapshot_id), "x") as f:
-                json.dump(_snapshot_to_json(snap), f, indent=1)
-            self._record_snapshot_id(snapshot_id)
-            refs[branch] = snapshot_id
-            self._write_refs(refs)
-        if fold_after and len(snap.deletes) >= fold_after:
-            try:
-                self.fold_deletes(branch=branch)
-            except CommitConflict:
-                pass
+        staged = self._write_data_dirs(df, "merge")
+        del_dir = self._write_key_dir(df, key_col)
+        snap = self._commit(branch, _keyed("merge", staged, del_dir, key_col), expect)
+        self._auto_fold(snap, branch)
         return snap
 
     def delete_keys(
@@ -1799,53 +1883,12 @@ class SnapshotTable:
         """
         if key_col not in keys.columns:
             raise ValueError(f"keys DataFrame has no column {key_col!r}")
-        fold_after = self.DELETE_FOLD_THRESHOLD
-        del_dir = os.path.join(self._data_dir, f"del-{uuid.uuid4().hex[:12]}")
-        keys.select(key_col).distinct().write.mode("errorifexists").parquet(del_dir)
-        with self._commit_lock():
-            refs = self._read_refs()
-            parent_id = refs.get(branch)
-            if not isinstance(expected_parent, _Unset) and parent_id != expected_parent:
-                raise CommitConflict(
-                    f"branch {branch!r} is at snapshot {parent_id}, "
-                    f"expected {expected_parent}"
-                )
-            if parent_id is None:
-                raise LookupError(
-                    f"branch {branch!r} has no snapshots to delete from"
-                )
-            parent = self._load_snapshot(parent_id)
-            snapshot_id = self._next_snapshot_id()
-            snap = Snapshot(
-                snapshot_id=snapshot_id,
-                parent_id=parent_id,
-                mode="delete",
-                data_dirs=parent.data_dirs,
-                committed_at=time.time(),
-                deletes=parent.deletes
-                + ((del_dir, key_col, parent.data_dirs),),
-                dir_stats=parent.dir_stats,
-                file_stats=parent.file_stats,
-                dir_partitions=parent.dir_partitions,
-                dir_epochs=parent.dir_epochs,
-            )
-            with open(self._snap_path(snapshot_id), "x") as f:
-                json.dump(_snapshot_to_json(snap), f, indent=1)
-            self._record_snapshot_id(snapshot_id)
-            refs[branch] = snapshot_id
-            self._write_refs(refs)
-        if fold_after and len(snap.deletes) >= fold_after:
-            # Auto-compaction trigger: every outstanding delete vector is
-            # an anti-join every subsequent read replays, so unbounded
-            # stacking degrades reads linearly in takedown count. Fold
-            # them physically once the stack hits the threshold; a
-            # concurrent writer beating the fold's CAS just postpones it
-            # to the next delete (janitor semantics — maintenance never
-            # wins over writers).
-            try:
-                self.fold_deletes(branch=branch)
-            except CommitConflict:
-                pass
+        expect = self._expect_parent(branch, expected_parent)
+        del_dir = self._write_key_dir(keys, key_col)
+        snap = self._commit(
+            branch, _keyed("delete", _Dirs(), del_dir, key_col), expect
+        )
+        self._auto_fold(snap, branch)
         return snap
 
     def fold_deletes(self, branch: str = _MAIN) -> "Optional[Snapshot]":
@@ -1876,104 +1919,25 @@ class SnapshotTable:
         snap = self._load_snapshot(head)
         if not snap.deletes:
             return None
-        covered_set = {
+        covered = tuple(
             d
             for d in snap.data_dirs
             if any(d in covers for (_, _, covers) in snap.deletes)
-        }
-        untouched = tuple(d for d in snap.data_dirs if d not in covered_set)
-        by_cover: dict[tuple[int, ...], list[str]] = {}
-        for d in snap.data_dirs:
-            if d not in covered_set:
-                continue
-            applicable = tuple(
-                i for i, (_, _, covers) in enumerate(snap.deletes) if d in covers
-            )
-            by_cover.setdefault(applicable, []).append(d)
-        parts: list[DataFrame] = []
-        for applicable, dirs in by_cover.items():
-            # Evolution-aware: a cover group can span rename/widen
-            # epochs (a plain merged read would refuse int vs bigint).
-            df = self._read_dirs_evolved(snap, dirs)
-            by_key: dict[str, list[str]] = {}
-            for i in applicable:
-                del_dir, key_col, _ = snap.deletes[i]
-                by_key.setdefault(key_col, []).append(del_dir)
-            for key_col, del_dirs in by_key.items():
-                keys = self.spark.read.parquet(*del_dirs).select(key_col)
-                df = df.join(keys, on=key_col, how="left_anti")
-            parts.append(df)
-        folded = parts[0]
-        for p in parts[1:]:
-            folded = folded.unionByName(p, allowMissingColumns=True)
+        )
+        untouched = tuple(d for d in snap.data_dirs if d not in covered)
+        folded = self._read_live(dataclasses.replace(snap, data_dirs=covered))
         # Maintenance honors the declared layout: folded rows re-bucket
         # under the current partition spec (colocated joins and spec
         # pruning keep working across a fold).
-        # Epoch captured before staging for the same reason as write():
-        # the folded frame's names reflect the registry state now; a
-        # rename committing during the rewrite must not re-label it.
-        fold_epoch = self._registry_epoch_for_write(folded)
-        new_dirs, new_parts, new_dir_stats, new_file_stats_map = (
-            self._write_data_dirs(folded, "fold")
+        staged = self._write_data_dirs(folded, "fold")
+        return self._commit(
+            branch,
+            lambda parent: {
+                "mode": "fold",
+                **_extended(_dirs_of(parent, untouched), staged),
+            },
+            {branch: head},
         )
-        fold_epochs = (
-            {d: fold_epoch for d in new_dirs} if fold_epoch is not None else {}
-        )
-        with self._commit_lock():
-            refs = self._read_refs()
-            parent_id = refs.get(branch)
-            if parent_id != head:
-                raise CommitConflict(
-                    f"branch {branch!r} moved to {parent_id} during fold "
-                    f"(was {head})"
-                )
-            snapshot_id = self._next_snapshot_id()
-            new_snap = Snapshot(
-                snapshot_id=snapshot_id,
-                parent_id=parent_id,
-                mode="fold",
-                data_dirs=untouched + tuple(new_dirs),
-                committed_at=time.time(),
-                deletes=(),
-                dir_stats={
-                    **{
-                        d: snap.dir_stats[d]
-                        for d in untouched
-                        if d in snap.dir_stats
-                    },
-                    **new_dir_stats,
-                },
-                file_stats={
-                    **{
-                        d: snap.file_stats[d]
-                        for d in untouched
-                        if d in snap.file_stats
-                    },
-                    **new_file_stats_map,
-                },
-                dir_partitions={
-                    **{
-                        d: snap.dir_partitions[d]
-                        for d in untouched
-                        if d in snap.dir_partitions
-                    },
-                    **new_parts,
-                },
-                dir_epochs={
-                    **{
-                        d: snap.dir_epochs[d]
-                        for d in untouched
-                        if d in snap.dir_epochs
-                    },
-                    **fold_epochs,
-                },
-            )
-            with open(self._snap_path(snapshot_id), "x") as f:
-                json.dump(_snapshot_to_json(new_snap), f, indent=1)
-            self._record_snapshot_id(snapshot_id)
-            refs[branch] = snapshot_id
-            self._write_refs(refs)
-        return new_snap
 
     def commit_with_retry(
         self,
@@ -2367,43 +2331,33 @@ class SnapshotTable:
                 return empty.filter(_filters_to_column(filters)).limit(0)
             # Re-derive the snapshot view over the surviving dirs only;
             # delete anti-joins below still apply per covered group.
-            snap = Snapshot(
-                snapshot_id=snap.snapshot_id,
-                parent_id=snap.parent_id,
-                mode=snap.mode,
-                data_dirs=kept,
-                committed_at=snap.committed_at,
-                deletes=snap.deletes,
-                dir_stats=snap.dir_stats,
-                file_stats=snap.file_stats,
-                dir_partitions=snap.dir_partitions,
-                dir_epochs=snap.dir_epochs,
-            )
+            snap = dataclasses.replace(snap, data_dirs=kept)
+        out = self._read_live(
+            snap, paths_for=(lambda d: scan_paths[d]) if scan_paths else None
+        )
+        if filters:
+            out = out.filter(_filters_to_column(filters))
+        return out
 
-        # mergeSchema: appended files may carry ADDED columns (schema
-        # evolution); the merged read surfaces the union schema with
-        # NULLs for files written before the column existed — the
-        # Iceberg add-column semantics. Parquet is name-addressed, so
-        # old files never mis-bind to new columns.
-        def _read_dirs(dirs) -> DataFrame:
-            return self._read_dirs_evolved(
-                snap,
-                dirs,
-                paths_for=lambda d: scan_paths[d] if scan_paths else [d],
-            )
+    def _read_live(self, snap: Snapshot, paths_for=None) -> DataFrame:
+        """The rows of ``snap``'s data dirs with its delete vectors
+        applied — shared by :meth:`read` and :meth:`fold_deletes`.
 
+        Group the dirs by the exact set of delete entries covering them
+        (a delete never touches dirs appended after it committed),
+        anti-join each group once per key column (same-column deletes
+        union into a single build side), and union the groups. Typical
+        shape: one group of old dirs with deletes, one of newer dirs
+        without — two scans, each with full pushdown. The anti-join
+        builds a broadcast-sized hash of the (small) key set at scale;
+        Spark picks BroadcastHashJoin on its own. Each group reads
+        through :meth:`_read_dirs_evolved` (a group can span
+        rename/widen epochs, which a plain merged read would refuse),
+        with ``paths_for`` mapping a dir to its pruned scan paths."""
         if not snap.deletes:
-            out = _read_dirs(snap.data_dirs)
-            if filters:
-                out = out.filter(_filters_to_column(filters))
-            return out
-        # Row-level deletes: group data dirs by the exact set of delete
-        # entries covering them (a delete never touches dirs appended
-        # after it committed), anti-join each group against its keys,
-        # union. Typical shape: one group of old dirs with deletes, one
-        # of newer dirs without — two scans, each with full pushdown.
-        # The anti-join builds a broadcast-sized hash of the (small)
-        # key set at scale; Spark picks BroadcastHashJoin on its own.
+            return self._read_dirs_evolved(
+                snap, snap.data_dirs, paths_for=paths_for
+            )
         by_cover: dict[tuple[int, ...], list[str]] = {}
         for d in snap.data_dirs:
             applicable = tuple(
@@ -2412,9 +2366,7 @@ class SnapshotTable:
             by_cover.setdefault(applicable, []).append(d)
         parts: list[DataFrame] = []
         for applicable, dirs in by_cover.items():
-            df = _read_dirs(dirs)
-            # One anti-join per key column: keys of same-column deletes
-            # union into a single build side.
+            df = self._read_dirs_evolved(snap, dirs, paths_for=paths_for)
             by_key: dict[str, list[str]] = {}
             for i in applicable:
                 del_dir, key_col, _ = snap.deletes[i]
@@ -2426,8 +2378,6 @@ class SnapshotTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        if filters:
-            out = out.filter(_filters_to_column(filters))
         return out
 
     # ---- branch ops (all O(1) metadata) ---------------------------------
@@ -2565,10 +2515,7 @@ class SnapshotTable:
             # Clean fast-forward — no divergence to reconcile.
             with self._commit_lock():
                 live = self._read_refs()
-                if live.get(dst) != dst_head_id or live.get(src) != src_head_id:
-                    raise CommitConflict(
-                        f"{src!r} or {dst!r} moved during merge"
-                    )
+                _check_refs(live, {dst: dst_head_id, src: src_head_id})
                 live[dst] = src_head_id
                 self._write_refs(live)
             return self._load_snapshot(src_head_id)
@@ -2656,62 +2603,25 @@ class SnapshotTable:
                     n_conflicts=n,
                 )
 
-        new_dirs = [d for d in src_head.data_dirs if d not in base.data_dirs]
+        # src's post-base delta — its new dirs (with their map entries)
+        # and new scoped deletes, original ordering and scoping kept —
+        # extends dst's head as ONE merge snapshot.
+        new = _dirs_of(
+            src_head, [d for d in src_head.data_dirs if d not in base.data_dirs]
+        )
         new_dels = tuple(
             dd for dd in src_head.deletes if dd not in base.deletes
         )
-        with self._commit_lock():
-            live = self._read_refs()
-            if live.get(dst) != dst_head_id or live.get(src) != src_head_id:
-                raise CommitConflict(f"{src!r} or {dst!r} moved during merge")
-            snapshot_id = self._next_snapshot_id()
-            snap = Snapshot(
-                snapshot_id=snapshot_id,
-                parent_id=dst_head_id,
-                mode="merge",
-                merged_from=src_head_id,
-                data_dirs=dst_head.data_dirs + tuple(new_dirs),
-                committed_at=time.time(),
-                deletes=dst_head.deletes + new_dels,
-                dir_stats={
-                    **dst_head.dir_stats,
-                    **{
-                        d: src_head.dir_stats[d]
-                        for d in new_dirs
-                        if d in src_head.dir_stats
-                    },
-                },
-                file_stats={
-                    **dst_head.file_stats,
-                    **{
-                        d: src_head.file_stats[d]
-                        for d in new_dirs
-                        if d in src_head.file_stats
-                    },
-                },
-                dir_partitions={
-                    **dst_head.dir_partitions,
-                    **{
-                        d: src_head.dir_partitions[d]
-                        for d in new_dirs
-                        if d in src_head.dir_partitions
-                    },
-                },
-                dir_epochs={
-                    **dst_head.dir_epochs,
-                    **{
-                        d: src_head.dir_epochs[d]
-                        for d in new_dirs
-                        if d in src_head.dir_epochs
-                    },
-                },
-            )
-            with open(self._snap_path(snapshot_id), "x") as f:
-                json.dump(_snapshot_to_json(snap), f, indent=1)
-            self._record_snapshot_id(snapshot_id)
-            live[dst] = snapshot_id
-            self._write_refs(live)
-        return snap
+        return self._commit(
+            dst,
+            lambda parent: {
+                "mode": "merge",
+                "merged_from": src_head_id,
+                "deletes": parent.deletes + new_dels,
+                **_extended(parent, new),
+            },
+            {dst: dst_head_id, src: src_head_id},
+        )
 
     def rebase_branch(
         self,
@@ -2770,10 +2680,7 @@ class SnapshotTable:
             # src added nothing: rebase == fast-forward onto onto's head.
             with self._commit_lock():
                 live = self._read_refs()
-                if live.get(src) != src_head_id or live.get(onto) != onto_head_id:
-                    raise CommitConflict(
-                        f"{src!r} or {onto!r} moved during rebase"
-                    )
+                _check_refs(live, {src: src_head_id, onto: onto_head_id})
                 live[src] = onto_head_id
                 self._write_refs(live)
             return self._load_snapshot(onto_head_id)
@@ -2996,55 +2903,19 @@ class SnapshotTable:
             applied_keys = (
                 k if applied_keys is None else applied_keys.unionByName(k)
             )
-        new_dirs_out: list[str] = []
-        new_partitions: dict = {}
-        new_dir_stats: dict = {}
-        new_file_stats: dict = {}
-        write_epoch = None
-        if upserts is not None:
-            write_epoch = self._registry_epoch_for_write(upserts)
-            (
-                new_dirs_out,
-                new_partitions,
-                new_dir_stats,
-                new_file_stats,
-            ) = self._write_data_dirs(upserts, "rebase")
-        del_dir = os.path.join(self._data_dir, f"del-{uuid.uuid4().hex[:12]}")
-        applied_keys.distinct().write.mode("errorifexists").parquet(del_dir)
-        new_epochs = (
-            {d: write_epoch for d in new_dirs_out}
-            if write_epoch is not None
-            else {}
+        staged = (
+            self._write_data_dirs(upserts, "rebase")
+            if upserts is not None
+            else _Dirs()
         )
-        with self._commit_lock():
-            live_refs = self._read_refs()
-            if (
-                live_refs.get(src) != src_head_id
-                or live_refs.get(onto) != onto_head_id
-            ):
-                raise CommitConflict(f"{src!r} or {onto!r} moved during rebase")
-            snapshot_id = self._next_snapshot_id()
-            snap = Snapshot(
-                snapshot_id=snapshot_id,
-                parent_id=onto_head_id,
-                mode="rebase",
-                data_dirs=onto_head.data_dirs + tuple(new_dirs_out),
-                committed_at=time.time(),
-                # The equality delete covers ONLY onto-head's dirs: the
-                # replayed dir's rows survive their own keys.
-                deletes=onto_head.deletes
-                + ((del_dir, key_col, onto_head.data_dirs),),
-                dir_stats={**onto_head.dir_stats, **new_dir_stats},
-                file_stats={**onto_head.file_stats, **new_file_stats},
-                dir_partitions={**onto_head.dir_partitions, **new_partitions},
-                dir_epochs={**onto_head.dir_epochs, **new_epochs},
-            )
-            with open(self._snap_path(snapshot_id), "x") as f:
-                json.dump(_snapshot_to_json(snap), f, indent=1)
-            self._record_snapshot_id(snapshot_id)
-            live_refs[src] = snapshot_id
-            self._write_refs(live_refs)
-        return snap
+        del_dir = self._write_key_dir(applied_keys, key_col)
+        # src moves to a child of onto's head.
+        return self._commit(
+            src,
+            _keyed("rebase", staged, del_dir, key_col),
+            {src: src_head_id, onto: onto_head_id},
+            parent_ref=onto,
+        )
 
     def ref_log(self) -> list[dict]:
         """The table's ref topology as plain rows — the Nessie

@@ -16,12 +16,16 @@ Design — one ref store, one commit point:
   semantics (CAS, WAP branches, retention) while serializing on the
   catalog like writers against a real catalog service.
 - Because all refs live in ONE file published by atomic rename, a
-  multi-table transaction is: stage every table's data + manifest
-  (expensive, outside the lock), then — under the catalog lock —
-  validate every CAS expectation and swap ALL refs in one rename.
-  Readers see every table move together or none (snapshot isolation at
-  the catalog level); a conflict on ANY table aborts the WHOLE
-  transaction with nothing published.
+  multi-table transaction is: stage every table's data (expensive,
+  outside the lock, through the same ``_write_data_dirs`` as a
+  single-table write, so partition spec, bloom columns and column
+  registry epochs apply), then hand every staged commit to the one
+  publish function ``snapshots._publish`` with the CATALOG's lock and
+  ref store: it validates every CAS expectation, writes each table's
+  manifest, and swaps ALL refs in one rename. Readers see every table
+  move together or none (snapshot isolation at the catalog level); a
+  conflict on ANY table aborts the WHOLE transaction with nothing
+  published.
 
 Failure atlas: a crash before ``commit()`` leaves staged data dirs
 (janitor: ``orphan_data_dirs``); a crash inside ``commit()`` after
@@ -42,21 +46,21 @@ from __future__ import annotations
 import contextlib
 import json
 import os
-import time
 import uuid
-from dataclasses import dataclass
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from deathmetal_datalake_spark.sources.snapshots import (
     UNSET,
-    CommitConflict,
     Snapshot,
     SnapshotTable,
-    _collect_dir_stats,
-    _snapshot_to_json,
+    _Commit,
+    _expectation,
+    _file_lock,
+    _publish,
     _Unset,
+    _written,
 )
 
 _SEP = "::"  # table-name / branch-name separator in the shared ref store
@@ -103,27 +107,13 @@ class _CatalogTable(SnapshotTable):
         self._catalog._write_all_refs(merged)
 
 
-@dataclass(frozen=True)
-class _StagedWrite:
-    table: str
-    branch: str
-    mode: str
-    data_dir: str
-    expected_parent: "Optional[int] | _Unset"
-    # Manifest column stats for data_dir (dir-level and per-file),
-    # harvested at staging time (outside the lock) — same read-side
-    # pruning as single-table writes.
-    stats: dict
-    file_stats: dict
-
-
 class CatalogTransaction:
     """Stage writes to any number of catalog tables, publish all refs
     in ONE atomic swap. Use via :meth:`SnapshotCatalog.transaction`."""
 
     def __init__(self, catalog: "SnapshotCatalog"):
         self._catalog = catalog
-        self._staged: list[_StagedWrite] = []
+        self._staged: list[_Commit] = []
         self._done = False
 
     def write(
@@ -145,13 +135,14 @@ class CatalogTransaction:
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         tbl = self._catalog.table(table)
-        new_dir = os.path.join(tbl._data_dir, f"snap-{uuid.uuid4().hex[:12]}")
-        df.write.mode("errorifexists").parquet(new_dir)
-        stats, file_stats = _collect_dir_stats(new_dir)
+        # Staged like a single-table write: partition spec, bloom
+        # columns and the column registry's write epoch all apply.
+        staged = tbl._write_data_dirs(df, "snap")
+        ref = table + _SEP + branch
         self._staged.append(
-            _StagedWrite(
-                table, branch, mode, new_dir, expected_parent,
-                stats, file_stats,
+            _Commit(
+                tbl, ref, _written(mode, staged),
+                _expectation(ref, expected_parent),
             )
         )
 
@@ -166,54 +157,10 @@ class CatalogTransaction:
         if not self._staged:
             return {}
         cat = self._catalog
-        with cat._commit_lock():
-            all_refs = cat._read_all_refs()
-            # Phase 1 — validate EVERY expectation before touching any
-            # metadata, so a conflict aborts with zero side effects.
-            for s in self._staged:
-                parent = all_refs.get(s.table + _SEP + s.branch)
-                if not isinstance(s.expected_parent, _Unset) and (
-                    parent != s.expected_parent
-                ):
-                    raise CommitConflict(
-                        f"table {s.table!r} branch {s.branch!r} is at "
-                        f"snapshot {parent}, expected {s.expected_parent}"
-                    )
-            # Phase 2 — write manifests (per-table snapshot ids), then
-            # swap all refs at once: the single visibility point.
-            out: dict[str, Snapshot] = {}
-            for s in self._staged:
-                tbl = cat.table(s.table)
-                parent = all_refs.get(s.table + _SEP + s.branch)
-                sid = tbl._next_snapshot_id()
-                deletes: tuple = ()
-                if s.mode == "append" and parent is not None:
-                    p = tbl._load_snapshot(parent)
-                    dirs = p.data_dirs + (s.data_dir,)
-                    deletes = p.deletes
-                    dir_stats = {**p.dir_stats, s.data_dir: s.stats}
-                    file_stats = {**p.file_stats, s.data_dir: s.file_stats}
-                else:
-                    dirs = (s.data_dir,)
-                    dir_stats = {s.data_dir: s.stats}
-                    file_stats = {s.data_dir: s.file_stats}
-                snap = Snapshot(
-                    snapshot_id=sid,
-                    parent_id=parent,
-                    mode=s.mode,
-                    data_dirs=dirs,
-                    committed_at=time.time(),
-                    deletes=deletes,
-                    dir_stats=dir_stats,
-                    file_stats=file_stats,
-                )
-                with open(tbl._snap_path(sid), "x") as f:
-                    json.dump(_snapshot_to_json(snap), f, indent=1)
-                tbl._record_snapshot_id(sid)
-                all_refs[s.table + _SEP + s.branch] = sid
-                out[s.table] = snap
-            cat._write_all_refs(all_refs)
-        return out
+        snaps = _publish(
+            self._staged, cat._commit_lock, cat._read_all_refs, cat._write_all_refs
+        )
+        return {c.table._name: snap for c, snap in zip(self._staged, snaps)}
 
     def abort(self) -> None:
         """Discard the transaction: staged data dirs become orphans for
@@ -263,14 +210,7 @@ class SnapshotCatalog:
         os.replace(tmp, self._refs_path)
 
     def _commit_lock(self):
-        # Reuse SnapshotTable's stale-safe lock implementation against
-        # the CATALOG lock path: a minimal proxy carries the two
-        # attributes the lock reads (base_path for messages, _meta_dir
-        # for the lock location).
-        proxy = SnapshotTable.__new__(SnapshotTable)
-        proxy.base_path = self.base_path
-        proxy._meta_dir = self._meta_dir
-        return SnapshotTable._commit_lock(proxy)
+        return _file_lock(self._lock_path)
 
     # ---- tables ----------------------------------------------------------
 

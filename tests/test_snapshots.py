@@ -544,6 +544,22 @@ def test_compact_applies_deletes_physically(spark, table, orders):
     assert table.read().count() == 15
 
 
+def test_delete_keys_stale_parent_writes_nothing(spark, table, orders):
+    """A stale ``expected_parent`` fails before the key dir is staged,
+    so the refused delete leaves no orphan behind."""
+    from deathmetal_datalake_spark.sources.snapshots import CommitConflict
+
+    s1 = table.write(orders.limit(5), mode="overwrite")
+    table.write(orders.limit(3), mode="append")
+    with pytest.raises(CommitConflict):
+        table.delete_keys(
+            orders.select("o_orderkey").limit(1),
+            "o_orderkey",
+            expected_parent=s1.snapshot_id,
+        )
+    assert table.orphan_data_dirs() == []
+
+
 def test_delete_requires_existing_snapshot(spark, table, orders):
     with pytest.raises(LookupError):
         table.delete_keys(orders.select("o_orderkey").limit(1), "o_orderkey")
@@ -844,10 +860,11 @@ def test_partition_spec_delete_and_fold_keep_values(spark, table, orders):
 
 def test_takedown_sequence_model_property(spark, tmp_path):
     """Model-based invariant for the delete/append/fold machinery:
-    any sequence of (append batch | delete keys) operations leaves the
-    table equal to a driver-side model applying the same ops — with
-    auto-fold firing mid-sequence at a low threshold, so folds
-    interleave with live traffic rather than running on a quiet table."""
+    any sequence of (append batch | upsert batch | delete keys)
+    operations leaves the table equal to a driver-side model applying
+    the same ops — with auto-fold firing mid-sequence at a low
+    threshold (from upserts as well as deletes), so folds interleave
+    with live traffic rather than running on a quiet table."""
     import os as _os
 
     from hypothesis import given, settings
@@ -856,9 +873,15 @@ def test_takedown_sequence_model_property(spark, tmp_path):
     op = st.one_of(
         st.tuples(st.just("append"), st.lists(st.integers(0, 30), min_size=1, max_size=5)),
         st.tuples(st.just("delete"), st.lists(st.integers(0, 30), min_size=1, max_size=5)),
+        st.tuples(st.just("upsert"), st.lists(st.integers(0, 30), min_size=1, max_size=5)),
     )
 
     counter = [0]
+
+    def frame(rows, cols):
+        # Inline VALUES (bigint literals): no Python-worker tasks per write.
+        values = ", ".join("(" + ", ".join(f"{v}L" for v in r) + ")" for r in rows)
+        return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
 
     @settings(max_examples=8, deadline=None)
     @given(ops=st.lists(op, min_size=2, max_size=8))
@@ -874,18 +897,24 @@ def test_takedown_sequence_model_property(spark, tmp_path):
                 rows = [(k, next_tag[0] + i) for i, k in enumerate(keys)]
                 next_tag[0] += len(keys)
                 t.write(
-                    spark.createDataFrame(rows, "k long, tag long"),
+                    frame(rows, "k, tag"),
                     mode="append" if written else "overwrite",
                 )
                 written = True
                 for k in keys:
                     model[k] = model.get(k, 0) + 1
+            elif kind == "upsert":
+                if not written:
+                    continue
+                rows = [(k, next_tag[0] + i) for i, k in enumerate(sorted(set(keys)))]
+                next_tag[0] += len(rows)
+                t.merge_upsert(frame(rows, "k, tag"), "k")
+                for k in set(keys):
+                    model[k] = 1
             else:
                 if not written:
                     continue
-                t.delete_keys(
-                    spark.createDataFrame([(k,) for k in set(keys)], "k long"), "k"
-                )
+                t.delete_keys(frame([(k,) for k in set(keys)], "k"), "k")
                 for k in set(keys):
                     model.pop(k, None)
         if not written:
@@ -1519,3 +1548,100 @@ def test_merge_branch_merged_from_survives_manifest_roundtrip(table, spark):
     assert reloaded.merged_from == dev_head
     # Non-merge snapshots carry None (manifest back-compat default).
     assert table._load_snapshot(dev_head).merged_from is None
+
+
+# ---- golden manifests: one commit of every kind ---------------------------
+
+GOLDEN_MANIFESTS = os.path.join(
+    os.path.dirname(__file__), "golden", "commit_manifests.json"
+)
+
+
+def _commit_manifest_sequence(spark, root: str) -> list:
+    """One small table takes an overwrite, an append, an upsert, a
+    delete, a fold, a branch merge and a rebase (with a bloom column
+    and a column rename, so stats, file stats, blooms and write epochs
+    are all populated; partition inheritance has its own tests and its
+    shuffles would double the run time); one catalog takes two
+    transactions. Returns every manifest and refs file, normalized:
+    ``committed_at`` dropped, data dirs renamed to ordinals of first
+    appearance, the job uuid cut out of part-file names, every other
+    field as written."""
+    import json
+    import re
+
+    from deathmetal_datalake_spark.sources.transactions import SnapshotCatalog
+
+    # Inline VALUES frames: no Python worker per write, one file each.
+    def rows(pairs, value_col="w"):
+        values = ", ".join(f"({k}L, {v}L)" for k, v in pairs)
+        return spark.sql(
+            f"SELECT * FROM VALUES {values} AS t(k, {value_col})"
+        ).coalesce(1)
+
+    def keys(ks):
+        return rows([(k, 0) for k in ks]).select("k")
+
+    t = SnapshotTable(spark, os.path.join(root, "t"))
+    t.set_bloom_columns(["k"])
+    t.write(rows([(k, k) for k in range(6)], "v"), "overwrite")
+    t.rename_column("v", "w")
+    t.write(rows([(6, 60), (7, 70)]), "append")
+    t.merge_upsert(rows([(1, 11), (8, 80)]), "k")
+    t.delete_keys(keys([2]), "k")
+    t.fold_deletes()
+    t.create_branch("dev")
+    t.write(rows([(20, 200)]), "append", branch="dev")
+    t.delete_keys(keys([3]), "k")
+    t.merge_branch("dev", "main", "k")
+    t.create_branch("feat")
+    t.merge_upsert(rows([(30, 300)]), "k", branch="feat")
+    t.write(rows([(40, 400)]), "append")
+    t.rebase_branch("feat", "main", "k")
+    cat = SnapshotCatalog(spark, os.path.join(root, "cat"))
+    with cat.transaction() as txn:
+        txn.write("a", rows([(1, 1)]), expected_parent=None)
+    with cat.transaction() as txn:
+        txn.write("a", rows([(2, 2)]), mode="append")
+        txn.write("b", rows([(3, 3)]), expected_parent=None)
+
+    docs = []
+    for meta in (t._meta_dir, *(cat.table(n)._meta_dir for n in ("a", "b"))):
+        sids = sorted(
+            int(n[len("snap-") : -len(".json")])
+            for n in os.listdir(meta)
+            if n.startswith("snap-") and n.endswith(".json")
+        )
+        for sid in sids:
+            with open(os.path.join(meta, f"snap-{sid}.json")) as f:
+                doc = json.load(f)
+            doc.pop("committed_at")
+            docs.append(doc)
+    for refs in (t._refs_path, cat._refs_path):
+        with open(refs) as f:
+            docs.append(json.load(f))
+    ordinals: dict[str, str] = {}
+
+    def ordinal(m) -> str:
+        return ordinals.setdefault(m.group(0), f"{m.group(1)}-{len(ordinals)}")
+
+    text = json.dumps(docs).replace(root, "<root>")
+    text = re.sub(r"\b(snap|merge|fold|rebase|del)-[0-9a-f]{12}\b", ordinal, text)
+    text = re.sub(r"(part-\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", r"\1", text)
+    return json.loads(text)
+
+
+def test_commit_manifests_match_golden(spark, tmp_path):
+    """Every commit kind writes the same manifest JSON as the recorded
+    golden sequence: the same top-level keys in the same order, and the
+    same content. Key order inside the stats maps is not compared — it
+    follows Python's per-process string hashing."""
+    import json
+
+    got = _commit_manifest_sequence(spark, str(tmp_path))
+    with open(GOLDEN_MANIFESTS) as f:
+        want = json.load(f)
+    assert [list(d) for d in got] == [list(d) for d in want]
+    assert json.dumps(got, indent=1, sort_keys=True) == json.dumps(
+        want, indent=1, sort_keys=True
+    )

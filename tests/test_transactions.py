@@ -208,3 +208,25 @@ def test_racing_cas_transactions_exactly_one_wins(spark, catalog):
         t.join(timeout=300)
     assert sorted(r.split(":")[1] for r in results) == ["conflict", "won"]
     assert catalog.table("docs").read().count() == 10
+
+
+def test_transaction_append_keeps_column_rename_epochs(spark, catalog):
+    """A transaction stages like a single-table write: its dir carries
+    the column registry's write epoch, and an append keeps the parent's
+    per-dir epochs — otherwise both dirs read under epoch 0's physical
+    names and a swapped pair of columns comes back swapped."""
+    schema = "k long, a long, b long"
+    t = catalog.table("docs")
+    t.write(spark.createDataFrame([(1, 10, 100)], schema), "overwrite")
+    # Swap a and b (pure metadata: three renames).
+    t.rename_column("a", "tmp")
+    t.rename_column("b", "a")
+    t.rename_column("tmp", "b")
+    t.write(spark.createDataFrame([(2, 200, 20)], schema), mode="append")
+    assert t.read().filter("k = 2").select("a", "b").first() == (200, 20)
+    with catalog.transaction() as txn:
+        txn.write(
+            "docs", spark.createDataFrame([(3, 300, 30)], schema), mode="append"
+        )
+    got = {r.k: (r.a, r.b) for r in t.read().collect()}
+    assert got == {1: (100, 10), 2: (200, 20), 3: (300, 30)}
